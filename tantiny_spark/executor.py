@@ -20,6 +20,7 @@ columns a query type needs are read (no positions for term queries).
 
 from __future__ import annotations
 
+from collections import Counter
 from dataclasses import dataclass
 import weakref
 
@@ -75,6 +76,9 @@ class SearchContext:
     # The full docs table is NOT cached — at web scale it can't be, and
     # range/negation scans want Parquet fast-field pushdown instead.
     ids: DataFrame | None = None
+    # live segments behind the dictionary union: a term has at most one
+    # dictionary row per segment, which bounds the raw-row expansion takes
+    num_segments: int = 1
 
     def __post_init__(self):
         # memoized global stats / doc-freq lookups: the "Weight" phase. One
@@ -107,42 +111,61 @@ class SearchContext:
 
     def field_stats(self, field: str) -> tuple:
         """(num_docs, avgdl) for a field across live segments."""
-        hit = self._stats_cache.get(field)
-        if hit is None:
-            rows = (
-                self.stats.where(F.col("field") == field)
-                .groupBy("field")
-                .agg(
-                    F.sum("num_docs").alias("num_docs"),
-                    F.sum("total_tokens").alias("total_tokens"),
-                )
-                .collect()
-            )
-            if rows:
-                n = int(rows[0]["num_docs"])
-                tot = int(rows[0]["total_tokens"])
-                hit = (n, (tot / n) if n else 1.0)
-            else:
-                hit = (0, 1.0)
-            self._stats_cache[field] = hit
-        return hit
+        self.prime([field], ())
+        return self._stats_cache[field]
 
     def term_dfs(self, field: str, terms: list) -> dict:
         """doc-freq per term (0 when absent), batched + memoized."""
-        missing = [t for t in terms if (field, t) not in self._df_cache]
-        if missing:
-            rows = (
-                self.dictionary.where(
-                    (F.col("field") == field) & (F.col("term").isin(missing))
-                )
-                .groupBy("term")
-                .agg(F.sum("df").alias("df"))
-                .collect()
-            )
-            found = {r["term"]: int(r["df"]) for r in rows}
-            for t in missing:
-                self._df_cache[(field, t)] = found.get(t, 0)
+        self.prime((), [(field, t) for t in terms])
         return {t: self._df_cache[(field, t)] for t in terms}
+
+    def prime(self, fields, pairs) -> None:
+        """Resolve every field stat and (field, term) doc-freq not yet
+        memoized in ONE shuffle-free collect: the raw per-segment stats and
+        dictionary rows (at most keys × live segments) come back as they
+        are and the driver sums them — no groupBy, so no exchange and no
+        second AQE job."""
+        fields = sorted({f for f in fields if f not in self._stats_cache})
+        per_field: dict = {}
+        for f, t in pairs:
+            if (f, t) not in self._df_cache:
+                per_field.setdefault(f, set()).add(t)
+        parts = []
+        if fields:
+            parts.append(
+                self.stats.where(F.col("field").isin(fields)).select(
+                    "field",
+                    F.lit(None).cast("string").alias("term"),
+                    F.col("num_docs").cast("long").alias("n"),
+                    F.col("total_tokens").cast("long").alias("tokens"),
+                )
+            )
+        if per_field:
+            pred = None
+            for f, ts in sorted(per_field.items()):
+                cond = (F.col("field") == f) & F.col("term").isin(sorted(ts))
+                pred = cond if pred is None else pred | cond
+            parts.append(
+                self.dictionary.where(pred).select(
+                    "field", "term",
+                    F.col("df").cast("long").alias("n"),
+                    F.lit(0).cast("long").alias("tokens"),
+                )
+            )
+        if not parts:
+            return
+        rows = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+        sums = {f: [0, 0] for f in fields}
+        dfs = {(f, t): 0 for f, ts in per_field.items() for t in ts}
+        for r in rows.collect():
+            if r["term"] is None:
+                sums[r["field"]][0] += r["n"]
+                sums[r["field"]][1] += r["tokens"]
+            else:
+                dfs[(r["field"], r["term"])] += r["n"]
+        for f, (n, tokens) in sums.items():
+            self._stats_cache[f] = (n, (tokens / n) if n else 1.0)
+        self._df_cache.update(dfs)
 
 
 def _idf_expr(df_col, n_col):
@@ -155,27 +178,21 @@ def _bm25_expr(tf_col, dl_col, avgdl_col, df_col, n_col):
 
 
 def prime_stats_many(nodes: list, ctx: SearchContext) -> None:
-    """Warm the stats/df caches for a whole query BATCH: one dictionary
-    lookup per distinct field across all plans (search_many pays the driver
-    round-trips once per batch, not once per query)."""
+    """Warm the stats/df caches for a whole query BATCH in one collect
+    (search_many pays the driver round-trip once per batch, not once per
+    query or field)."""
     per_field: dict = {}
     for node in nodes:
         _collect_stat_keys(node, per_field)
-    for field, terms in per_field.items():
-        ctx.field_stats(field)
-        if terms:
-            ctx.term_dfs(field, sorted(terms))
+    ctx.prime(per_field, [(f, t) for f, ts in per_field.items() for t in ts])
 
 
 def prime_stats(node: P.Query, ctx: SearchContext) -> None:
-    """Warm the stats/df memo caches for a whole plan in two batched lookups
-    per field (instead of one driver job per node during compilation)."""
+    """Warm the stats/df memo caches for a whole plan in one collect
+    (instead of one driver job per node during compilation)."""
     per_field: dict = {}
     _collect_stat_keys(node, per_field)
-    for field, terms in per_field.items():
-        ctx.field_stats(field)
-        if terms:
-            ctx.term_dfs(field, sorted(terms))
+    ctx.prime(per_field, [(f, t) for f, ts in per_field.items() for t in ts])
 
 
 def _collect_stat_keys(node: P.Query, per_field: dict) -> None:
@@ -208,8 +225,14 @@ def compile_plan(node: P.Query, ctx: SearchContext) -> DataFrame:
         return ctx.docs.select("doc_id", F.lit(1.0).alias("score"))
     if isinstance(node, P.Empty):
         return ctx.docs.sparkSession.createDataFrame([], RESULT_SCHEMA)
-    if isinstance(node, P.Term):
-        return _term(node, ctx)
+    bag = _term_bag(node)
+    if bag is not None:
+        rows = _term_rows(ctx, *bag)
+        if rows is None:
+            return ctx.docs.sparkSession.createDataFrame([], RESULT_SCHEMA)
+        if len(bag[1]) == 1:
+            return rows  # one posting per doc: nothing to sum
+        return rows.groupBy("doc_id").agg(F.sum("score").alias("score"))
     if isinstance(node, P.Phrase):
         return _phrase(node, ctx)
     if isinstance(node, P.PhrasePrefix):
@@ -289,10 +312,25 @@ def compile_plan(node: P.Query, ctx: SearchContext) -> DataFrame:
             )
         return out
     if isinstance(node, P.Disjunction):
-        children = [compile_plan(c, ctx) for c in node.children]
-        unioned = children[0]
-        for child in children[1:]:
-            unioned = unioned.unionByName(child)
+        # same-field term children share ONE scan per field; every other
+        # child compiles on its own; one sum groupBy combines them all
+        bags: dict = {}
+        parts = []
+        for c in node.children:
+            bag = _term_bag(c)
+            if bag is None:
+                parts.append(compile_plan(c, ctx))
+            else:
+                bags.setdefault(bag[0], Counter()).update(bag[1])
+        for field, weights in bags.items():
+            rows = _term_rows(ctx, field, weights)
+            if rows is not None:
+                parts.append(rows)
+        if not parts:
+            return ctx.docs.sparkSession.createDataFrame([], RESULT_SCHEMA)
+        unioned = parts[0]
+        for part in parts[1:]:
+            unioned = unioned.unionByName(part)
         return unioned.groupBy("doc_id").agg(F.sum("score").alias("score"))
     if isinstance(node, P.Negation):
         matched = compile_plan(node.child, ctx)
@@ -404,19 +442,57 @@ def _boolean_occur(node: P.BooleanOccur, ctx: SearchContext) -> DataFrame:
     return base
 
 
-def _term(node: P.Term, ctx: SearchContext) -> DataFrame:
-    n, avgdl = ctx.field_stats(node.field)
-    df = ctx.term_dfs(node.field, [node.term])[node.term]
-    p = ctx.postings.where(
-        (F.col("field") == node.field) & (F.col("term") == node.term)
-    ).select("doc_id", "norm_id")
-    # tf = 1: reference term queries read postings without freqs (Basic)
-    return p.select(
+def _term_bag(node: P.Query) -> tuple | None:
+    """``(field, {term: multiplier})`` when ``node`` scores as a weighted
+    sum of same-field term hits: a term, a boost of a bag, or a disjunction
+    of same-field bags. Boosts multiply into the multipliers and a repeated
+    term adds up, so the sum stays per occurrence. None for anything else."""
+    if isinstance(node, P.Term):
+        return node.field, {node.term: 1.0}
+    if isinstance(node, P.Boost):
+        inner = _term_bag(node.child)
+        if inner is None:
+            return None
+        return inner[0], {t: m * node.factor for t, m in inner[1].items()}
+    if isinstance(node, P.Disjunction):
+        field, out = None, Counter()
+        for c in node.children:
+            inner = _term_bag(c)
+            if inner is None or field not in (None, inner[0]):
+                return None
+            field = inner[0]
+            out.update(inner[1])
+        return field, out
+    return None
+
+
+def _term_rows(ctx: SearchContext, field: str, bag: dict) -> DataFrame | None:
+    """One BM25 row per posting of the bag's terms, from ONE postings scan
+    pruned by ``term IN (...)``; None when no term is in the index.
+
+    tf = 1: reference term queries read postings without freqs (Basic).
+    Each term's idf·(k1+1)·multiplier comes from one map literal indexed by
+    the ``term`` column. Spark hands map literals to generated code by
+    reference (a double literal is inlined into the Java source), so
+    queries of the same shape share one compiled class."""
+    n, avgdl = ctx.field_stats(field)
+    dfs = ctx.term_dfs(field, sorted(bag))
+    weights = {
+        t: scoring.idf(dfs[t], n) * (scoring.K1 + 1.0) * bag[t]
+        for t in sorted(bag) if dfs[t] > 0
+    }
+    if not weights:
+        return None
+    wmap = F.create_map(
+        *[c for t, w in weights.items() for c in (F.lit(t), F.lit(w))]
+    )
+    dl = _decode_norm(F.col("norm_id"))
+    norm = scoring.K1 * (1.0 - scoring.B + scoring.B * dl / F.lit(float(avgdl)))
+    return ctx.postings.where(
+        (F.col("field") == field) & F.col("term").isin(list(weights))
+    ).select(
         "doc_id",
-        _bm25_expr(
-            F.lit(1.0), _decode_norm(F.col("norm_id")),
-            F.lit(float(avgdl)), F.lit(float(df)), F.lit(float(n)),
-        ).alias("score"),
+        (F.element_at(wmap, F.col("term")) / (F.lit(1.0) + norm)).alias("score"),
     )
 
 
@@ -534,17 +610,10 @@ def _regex_phrase(node: P.RegexPhrase, ctx: SearchContext) -> DataFrame:
         return ctx.docs.sparkSession.createDataFrame([], RESULT_SCHEMA)
     parts = []
     for i, pat in enumerate(node.patterns):
-        exp = [
-            r["term"]
-            for r in (
-                ctx.dictionary.where(
-                    (F.col("field") == node.field)
-                    & F.col("term").rlike("^(?:" + pat + ")$")
-                )
-                .select("term").distinct()
-                .orderBy("term").limit(node.max_expansions).collect()
-            )
-        ]
+        exp = _dict_terms(
+            ctx, node.field, F.col("term").rlike("^(?:" + pat + ")$"),
+            node.max_expansions,
+        )
         if not exp:
             return ctx.docs.sparkSession.createDataFrame([], RESULT_SCHEMA)
         shift = 0 if node.slop else i
@@ -586,17 +655,10 @@ def _phrase_prefix(node: P.PhrasePrefix, ctx: SearchContext) -> DataFrame:
     corpus scan; per-doc expansion positions union via ONE flatten agg
     bounded by expansions-per-doc."""
     k = len(node.terms)
-    exp = [
-        r["term"]
-        for r in (
-            ctx.dictionary.where(
-                (F.col("field") == node.field)
-                & F.col("term").startswith(node.prefix)
-            )
-            .select("term").distinct()
-            .orderBy("term").limit(node.max_expansions).collect()
-        )
-    ]
+    exp = _dict_terms(
+        ctx, node.field, F.col("term").startswith(node.prefix),
+        node.max_expansions,
+    )
     if not exp:
         return ctx.docs.sparkSession.createDataFrame([], RESULT_SCHEMA)
     parts = []
@@ -636,6 +698,22 @@ def _phrase_prefix(node: P.PhrasePrefix, ctx: SearchContext) -> DataFrame:
 MAX_EXPANSION_LITERALS = 10_000
 
 
+def _dict_terms(ctx: SearchContext, field: str, term_predicate, n: int) -> list:
+    """The first ``n`` distinct matching dictionary terms in term order, in
+    ONE shuffle-free job: an ordered take of n × live-segments raw rows,
+    deduplicated on the driver. A term has at most one row per segment, so
+    those rows hold at least ``n`` distinct terms whenever that many match
+    — the same answer as distinct → orderBy → limit, without the shuffle."""
+    rows = (
+        ctx.dictionary.where((F.col("field") == field) & term_predicate)
+        .select("term")
+        .orderBy("term")
+        .limit(n * ctx.num_segments)
+        .collect()
+    )
+    return list(dict.fromkeys(r["term"] for r in rows))[:n]
+
+
 def _dict_expansion(
     ctx: SearchContext, field: str, term_predicate, cache_key=None,
 ) -> DataFrame:
@@ -647,36 +725,36 @@ def _dict_expansion(
     Parquet pushdown* — the fst-dictionary-first strategy of the reference
     (README.md:274) rather than a full field scan. A pathological pattern
     (`.*`, one-letter prefix on a web-scale dictionary) could match millions
-    of terms, so the collect is CAPPED: fetching MAX_EXPANSION_LITERALS+1
-    rows detects overflow, and the fallback is a semi-join of the postings
-    against the matched dictionary slice — fully distributed, no driver
-    materialization (AQE picks broadcast vs shuffle by actual size)."""
+    of terms, so the collect is CAPPED: taking MAX_EXPANSION_LITERALS+1
+    distinct terms (one shuffle-free job, see _dict_terms) detects overflow
+    exactly, and the fallback is a semi-join of the postings against the
+    matched dictionary slice — fully distributed, no driver materialization
+    (AQE picks broadcast vs shuffle by actual size)."""
+    # memoize the capped head per plan node: the snapshot's dictionary is
+    # immutable, so a repeated prefix/regex/fuzzy query must not re-run
+    # the expansion job (the dominant fixed cost of a repeated smart query)
+    head = ctx._expansion_cache.get(cache_key) if cache_key is not None else None
+    if head is None:
+        head = _dict_terms(ctx, field, term_predicate, MAX_EXPANSION_LITERALS + 1)
+        if cache_key is not None:
+            ctx._expansion_cache[cache_key] = head
+    if not head:
+        return ctx.docs.sparkSession.createDataFrame([], RESULT_SCHEMA)
+    if len(head) <= MAX_EXPANSION_LITERALS:
+        return (
+            ctx.postings.where(
+                (F.col("field") == field) & F.col("term").isin(head)
+            )
+            .select("doc_id")
+            .distinct()
+            .select("doc_id", F.lit(1.0).alias("score"))
+        )
     matched_df = (
         ctx.dictionary.where(F.col("field") == field)
         .where(term_predicate)
         .select("term")
         .distinct()
     )
-    # memoize the capped head per plan node: the snapshot's dictionary is
-    # immutable, so a repeated prefix/regex/fuzzy query must not re-run
-    # the expansion job (the dominant fixed cost of a repeated smart query)
-    head = ctx._expansion_cache.get(cache_key) if cache_key is not None else None
-    if head is None:
-        head = matched_df.limit(MAX_EXPANSION_LITERALS + 1).collect()
-        if cache_key is not None:
-            ctx._expansion_cache[cache_key] = head
-    if not head:
-        return ctx.docs.sparkSession.createDataFrame([], RESULT_SCHEMA)
-    if len(head) <= MAX_EXPANSION_LITERALS:
-        matched = [r["term"] for r in head]
-        return (
-            ctx.postings.where(
-                (F.col("field") == field) & F.col("term").isin(matched)
-            )
-            .select("doc_id")
-            .distinct()
-            .select("doc_id", F.lit(1.0).alias("score"))
-        )
     return (
         ctx.postings.where(F.col("field") == field)
         .join(matched_df, "term", "left_semi")

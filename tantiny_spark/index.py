@@ -27,7 +27,10 @@ from tantiny_spark.build import build_segment
 from tantiny_spark.errors import (
     IndexWriterBusyError, UnexpectedNone, UnsupportedField,
 )
-from tantiny_spark.executor import compile_plan, prime_stats, top_k, try_wand_topk
+from tantiny_spark.executor import compile_plan, prime_stats, top_k
+# not routed to by any search; imported so perfbench/trace.py can keep
+# wrapping ``index.try_wand_topk`` by name until wand.py is retired
+from tantiny_spark.executor import try_wand_topk  # noqa: F401
 from tantiny_spark.schema import IndexSchema
 from tantiny_spark.storage import IndexStorage, Snapshot
 
@@ -677,9 +680,9 @@ class Index:
         field's own tokenizer, keep terms with seed tf >= min_term_freq and
         dictionary df >= min_doc_freq, score tf * idf with the engine's BM25
         idf, and take the top ``max_query_terms`` by (score desc, term asc).
-        The result is a pure term disjunction, so search() rides the
-        block-max WAND top-k fast path; dictionary dfs come from ONE batched
-        pruned lookup per field (no per-term driver jobs)."""
+        The result is a pure term disjunction, so search() scores it with
+        one postings scan per field; the stats and dictionary dfs come from
+        ONE shuffle-free lookup (no per-term driver jobs)."""
         import math
         from collections import Counter
 
@@ -692,6 +695,7 @@ class Index:
             cand = sorted(t for t, c in tf.items() if c >= min_term_freq)
             if not cand:
                 continue
+            self.ctx.prime([f], [(f, t) for t in cand])
             dfs = self.ctx.term_dfs(f, cand)
             n, _ = self.ctx.field_stats(f)
             scored = []
@@ -737,6 +741,12 @@ class Index:
         self, query, limit: int = DEFAULT_LIMIT, offset: int = 0,
         search_after: tuple | None = None, **smart_opts,
     ) -> DataFrame:
+        """Top ``limit`` hits as DataFrame[id, score], ranked by (score
+        desc, id asc). A first-time query resolves its stats in one
+        shuffle-free lookup, then compiles to the plain plan: same-field
+        terms share one pruned postings scan, and top-k is a
+        TakeOrderedAndProject. Compiled queries are kept in an LRU until
+        reload()."""
         if offset < 0:
             raise ValueError("offset must be >= 0")
         plan = self._as_plan(query, smart_opts)
@@ -748,7 +758,7 @@ class Index:
         if hit is not None:
             self._query_cache.move_to_end(cache_key)
             return hit
-        # resolve every global stat the plan needs in two batched lookups
+        # resolve every global stat the plan needs in one batched lookup
         prime_stats(plan, self.ctx)
         if search_after is not None:
             # ES-style cursor pagination: strictly after the (score, id)
@@ -784,16 +794,9 @@ class Index:
                 .select("id", "score")
             )
             return self._cache_query(cache_key, out)
-        # block-max WAND fast path for pure term disjunctions; doc_id order is
-        # id order by construction, so tie-breaks agree with the naive path.
-        # Pagination rides the SAME top-k machinery at k = offset+limit (the
+        # pagination rides the SAME top-k operator at k = offset+limit (the
         # candidate set any rank-m..m+n page needs), then the final ordered
-        # limit skips the first offset rows — never a global sort.
-        fast = try_wand_topk(plan, self.ctx, limit + offset)
-        if fast is not None:
-            return self._cache_query(
-                cache_key, top_k(fast, self.ctx, limit, offset)
-            )
+        # limit skips the first offset rows — never a global sort
         return self._cache_query(
             cache_key, top_k(compile_plan(plan, self.ctx), self.ctx, limit, offset)
         )
@@ -889,8 +892,8 @@ class Index:
         ``limit`` as ``(id, score)``.
 
         Scale shape — the expensive query never sees the corpus: phase 1
-        rides the normal top-k machinery (WAND-eligible, partial top-k per
-        partition), so the candidate set is ≤ window_size rows; phase 2
+        rides the normal top-k machinery (the compiled plan, partial top-k
+        per partition), so the candidate set is ≤ window_size rows; phase 2
         LEFT-joins the rescorer's compiled doc-set against that bounded
         frame, which AQE plans as a broadcast of the candidates — the
         rescore query's postings scan is semi-join-pruned to the window.
@@ -902,10 +905,8 @@ class Index:
             raise ValueError("limit cannot exceed window_size")
         plan = self._as_plan(query, smart_opts)
         prime_stats(plan, self.ctx)
-        fast = try_wand_topk(plan, self.ctx, window_size)
-        primary = fast if fast is not None else compile_plan(plan, self.ctx)
         window = (
-            primary.join(self.ctx.id_map, "doc_id")
+            compile_plan(plan, self.ctx).join(self.ctx.id_map, "doc_id")
             .orderBy(F.col("score").desc(), F.col("id").asc())
             .limit(window_size)
         )

@@ -303,6 +303,7 @@ class Snapshot:
             postings=postings,
             dictionary=union_all(dict_parts).persist(),
             stats=union_all(stats_parts).persist(),
+            num_segments=len(dict_parts),
             # block-max fast path: deleted docs are baked inside the
             # compressed blocks, so the decoder must drop them post-decode —
             # dead_docs carries the (small) tombstoned doc_id set and keeps

@@ -63,6 +63,69 @@ def test_term_query_scoring_is_jvm_side(plan_index):
     assert "Python" not in plan and "Arrow" not in plan
 
 
+def test_same_field_or_is_one_postings_scan(plan_index):
+    """A same-field OR of terms is ONE postings scan pruned by
+    ``term IN (...)`` at the Parquet reader, then one sum groupBy — not a
+    union of per-term scans."""
+    ix = plan_index
+    q = ix.term_query("t", "w0") | ix.term_query("t", "w1") | ix.term_query("t", "w2")
+    plan = _physical(compile_plan(q, ix.ctx))
+    assert plan.count("FileScan") == 1, plan
+    pushed = plan[plan.index("PushedFilters"):]
+    assert "In(term, [w0,w1,w2])" in pushed, plan
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+
+
+def test_stats_lookup_is_one_shuffle_free_job(plan_index, monkeypatch):
+    """A novel plan over two fields resolves every field stat and doc-freq
+    it needs in ONE Spark job whose plan has no exchange (the raw
+    per-segment rows are summed on the driver)."""
+    from tantiny_spark import plan as P
+    from tantiny_spark.executor import prime_stats
+
+    ix = plan_index
+    # the cached stats/dictionary relations materialize on first use
+    prime_stats(ix.term_query("t", "w19"), ix.ctx)
+    q = P.disjunction(P.Term("t", "w4"), P.Facet("cat", "/c1"))
+    ix.ctx._stats_cache.pop("cat", None)
+    ix.ctx._df_cache.pop(("t", "w4"), None)
+    ix.ctx._df_cache.pop(("cat", "/c1"), None)
+
+    plans = []
+    frame = type(ix.ctx.stats)  # the concrete (classic) DataFrame class
+    collect = frame.collect
+
+    def spy(self):
+        plans.append(_physical(self))
+        return collect(self)
+
+    monkeypatch.setattr(frame, "collect", spy)
+    dag = ix.spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.nextJobId()
+    prime_stats(q, ix.ctx)
+    assert dag.nextJobId() - before == 1
+    assert len(plans) == 1 and "Exchange" not in plans[0], plans
+    n, _ = ix.ctx.field_stats("cat")
+    assert n == 300 and ix.ctx.term_dfs("cat", ["/c1"])["/c1"] == 100
+
+
+def test_term_queries_share_generated_code(plan_index):
+    """Two term queries with different terms and dfs compile to the SAME
+    whole-stage Java source: the per-term weight is a map literal that
+    generated code receives by reference, not an inlined double."""
+    ix = plan_index
+    dfs = ix.ctx.term_dfs("t", ["w5", "w9"])
+    assert dfs["w5"] != dfs["w9"]
+
+    def source(term):
+        df = compile_plan(ix.term_query("t", term), ix.ctx)
+        seq = df._jdf.queryExecution().debug().codegenToSeq()
+        return [seq.apply(i)._2() for i in range(seq.size())]
+
+    first = source("w5")
+    assert first and first == source("w9")
+
+
 def test_facet_counts_plan_shape(plan_index):
     """Facet counting = startswith range pushdown + partial aggregation;
     no explode node and the pre-shuffle partial_count is present."""

@@ -1,7 +1,9 @@
 """Randomized query-algebra parity: engine vs an independent Python model.
 
 The contract queries pin specific plans; this sweeps ~30 random algebra
-trees (term/&/|/!/boost/dis-max/const-score, depth ≤3) over a seeded corpus and checks the
+trees (term/&/|/!/boost/dis-max/const-score, depth ≤3, with boosted term
+leaves, ORs repeating a term and terms absent from the index, which the
+executor folds into one per-term weight map) over a seeded corpus and checks the
 engine's top-k (ids AND scores) against a from-first-principles pure-Python
 scorer that shares nothing with the executor: its own tokenize → tf=1 BM25
 over the quantized dl → score algebra → (score desc, id asc) ranking.
@@ -109,13 +111,27 @@ class Model:
         return ranked[:k]
 
 
+ABSENT = "zz"  # analyzes to a term no document contains
+
+
 def _random_tree(rng, depth=0):
     kind = rng.choice(
-        ["term"] * 3
-        + (["and", "or", "not", "boost", "dismax", "const"] if depth < 3 else [])
+        ["term"] * 3 + ["boosted_term", "absent"]
+        + (["and", "or", "or_repeat", "not", "boost", "dismax", "const"]
+           if depth < 3 else [])
     )
     if kind == "term":
         return P.Term("t", rng.choice(VOCAB))
+    if kind == "boosted_term":
+        return P.Term("t", rng.choice(VOCAB)).boost(rng.choice([0.5, 2.0, 3.5]))
+    if kind == "absent":
+        return P.Term("t", ABSENT)
+    if kind == "or_repeat":
+        # a term repeated inside one OR scores once per occurrence
+        word = P.Term("t", rng.choice(VOCAB))
+        return P.disjunction(
+            word, _random_tree(rng, depth + 1), word.boost(rng.choice([1.0, 2.0]))
+        )
     if kind == "and":
         return P.conjunction(*[_random_tree(rng, depth + 1) for _ in range(2)])
     if kind == "or":
