@@ -20,7 +20,9 @@ from collections import OrderedDict
 from contextlib import contextmanager
 from datetime import datetime
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from tantiny_spark import plan as P
 from tantiny_spark.build import build_segment
@@ -31,7 +33,7 @@ from tantiny_spark.executor import compile_plan, prime_stats, top_k
 # not routed to by any search; imported so perfbench/trace.py can keep
 # wrapping ``index.try_wand_topk`` by name until wand.py is retired
 from tantiny_spark.executor import try_wand_topk  # noqa: F401
-from tantiny_spark.schema import IndexSchema
+from tantiny_spark.schema import SPARK_TYPES, IndexSchema
 from tantiny_spark.storage import IndexStorage, Snapshot
 
 DEFAULT_LIMIT = 10  # index.rb:7
@@ -388,26 +390,22 @@ class Index:
         return list(alive.values()), sorted(touched)
 
     def _rows_to_df(self, rows: list) -> DataFrame | None:
+        """The pending rows as an Arrow-backed LocalRelation, so
+        build_segment's scans of them never start a Python worker. Values
+        go through the Spark type's ``toInternal``, the conversion
+        ``createDataFrame`` applies to Python rows: a naive datetime is read
+        in the process's local time, an aware one as its instant."""
         if not rows:
             return None
-        fields = [T.StructField("__order", T.IntegerType(), False)]
-        sch = self.schema
-        spark_types = {
-            "id": T.StringType(), "text": T.StringType(), "string": T.StringType(),
-            "integer": T.LongType(), "double": T.DoubleType(),
-            "date": T.TimestampType(), "facet": T.StringType(),
-            "json": T.StringType(),
-        }
-        for name, kind in sch.fields.items():
-            fields.append(T.StructField(name, spark_types[kind], True))
-        data = []
-        for i, row in enumerate(rows):
-            rec = [i] + [row.get(name) for name in sch.fields]
-            data.append(tuple(rec))
-        # single-slice parallelize: the default would fan a handful of pending
-        # docs across defaultParallelism Python tasks
-        rdd = self.spark.sparkContext.parallelize(data, 1)
-        return self.spark.createDataFrame(rdd, T.StructType(fields)).drop("__order")
+        struct = T.StructType(
+            [T.StructField(n, SPARK_TYPES[k], True) for n, k in self.schema.fields.items()]
+        )
+        arrow = to_arrow_schema(struct)
+        columns = [
+            pa.array([f.dataType.toInternal(row.get(f.name)) for row in rows], type=a.type)
+            for f, a in zip(struct.fields, arrow)
+        ]
+        return self.spark.createDataFrame(pa.Table.from_arrays(columns, schema=arrow), struct)
 
     def _commit_pending(self):
         rows, touched = self._replay_ops()

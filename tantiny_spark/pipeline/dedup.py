@@ -97,7 +97,12 @@ def lsh_candidate_pairs(
     num_hashes: int = 8, band_size: int = 2, shingle_n: int = 3,
 ) -> DataFrame:
     """Near-dup candidate pairs: docs agreeing on all hashes of any band.
-    The self-join happens per band bucket — bounded groups, no n² blowup."""
+    The self-join happens per band bucket — bounded groups, no n² blowup.
+
+    Each signature row is banded by ONE ``posexplode`` over the array of
+    its band buckets (``band`` is the 0-based band index, ``bucket`` the
+    ``|``-joined hashes of that band), so the minhash subtree appears once
+    per join side, not once per band."""
     sigs = minhash_signatures(df, text, key, num_hashes, shingle_n)
     # Docs with NO shingles (< shingle_n words) have all-null minhashes and
     # would otherwise ALL share the concat_ws bucket "" in every band — a
@@ -105,19 +110,13 @@ def lsh_candidate_pairs(
     # with zero shared shingles (true Jaccard 0/0). They can't be fuzzy
     # candidates, so drop them before banding.
     sigs = sigs.where(F.col("mh0").isNotNull())
-    bands = []
-    for b in range(num_hashes // band_size):
-        members = [F.col(f"mh{b * band_size + j}") for j in range(band_size)]
-        bands.append(
-            sigs.select(
-                F.col(key),
-                F.lit(b).alias("band"),
-                F.concat_ws("|", *members).alias("bucket"),
-            )
-        )
-    exploded = bands[0]
-    for b in bands[1:]:
-        exploded = exploded.unionByName(b)
+    buckets = [
+        F.concat_ws("|", *[F.col(f"mh{b * band_size + j}") for j in range(band_size)])
+        for b in range(num_hashes // band_size)
+    ]
+    exploded = sigs.select(
+        F.col(key), F.posexplode(F.array(*buckets)).alias("band", "bucket")
+    )
     left = exploded.alias("l")
     right = exploded.alias("r")
     return (
@@ -257,19 +256,15 @@ def simhash_candidate_pairs(df: DataFrame, text: str = "text", key: str = "doc_i
     by widening the chunks (more bands) than by pairing the crowd. At 100 TB
     always set a cap sized to the tolerable pairs-per-bucket budget."""
     sh = simhash64(df, text, key)
-    chunks = []
-    for c in range(4):
-        chunks.append(
-            sh.select(
-                F.col(key),
-                F.col("simhash"),
-                F.lit(c).alias("chunk"),
-                F.shiftright("simhash", c * 16).bitwiseAND(F.lit(0xFFFF)).alias("bucket"),
-            )
-        )
-    exploded = chunks[0]
-    for c in chunks[1:]:
-        exploded = exploded.unionByName(c)
+    # one posexplode over the four chunks: the simhash UDF runs once per
+    # join side, not once per chunk
+    chunks = [
+        F.shiftright("simhash", c * 16).bitwiseAND(F.lit(0xFFFF)) for c in range(4)
+    ]
+    exploded = sh.select(
+        F.col(key), F.col("simhash"),
+        F.posexplode(F.array(*chunks)).alias("chunk", "bucket"),
+    )
     if max_bucket_size is not None:
         small = (
             exploded.groupBy("chunk", "bucket")
@@ -306,16 +301,20 @@ def connected_components(
 ) -> DataFrame:
     """Connected components over an undirected edge list via min-label
     propagation: every node's label converges to the minimum node id in its
-    component. Returns (node, cluster).
+    component. Returns (node, label).
 
-    Scale shape: each iteration is one join + one min-aggregate, both keyed
-    on node id (bounded cardinality, no skew beyond the graph's own degree
-    distribution); iteration count is bounded by the largest component's
-    diameter, which for near-duplicate graphs is tiny (dup clusters are
-    near-cliques). Labels are persisted per round and localCheckpoint'ed
-    every 5 rounds so the lineage doesn't grow with iterations — the same
-    loop a 1000-executor job runs (GraphFrames' CC uses the equivalent
-    large-star/small-star contraction).
+    Round 1 is seeded straight from the symmetrized edges (each node's min
+    over itself and its neighbours), so a near-clique dup family settles in
+    that seed plus one confirming round; ``max_iterations`` counts the seed
+    and a component still changing after it fails loud.
+
+    Scale shape: each round is one join + one min-aggregate, both keyed on
+    node id (bounded cardinality, no skew beyond the graph's own degree
+    distribution); rounds are bounded by the largest component's diameter,
+    which is tiny for near-dup clusters (near-cliques). Each round's labels
+    are a lazy local checkpoint that its convergence sum materializes: the
+    lineage never grows, nothing enters the CacheManager, and the edge
+    caches are released on every exit path.
     """
     if max_iterations < 1:
         raise ValueError("max_iterations must be >= 1")
@@ -323,9 +322,7 @@ def connected_components(
     # the cache each round would re-execute the caller's whole upstream
     # lineage — for fuzzy_dedup_corpus that is the full LSH banding +
     # Jaccard verification pipeline, re-run twice per iteration (measured:
-    # the sf0.01 contract row went 77 s → ~20 s with this persist). The
-    # iterative working set is exactly what guide-style caching is for;
-    # GraphFrames' CC persists its edge/vertex frames the same way.
+    # the sf0.01 contract row went 77 s → ~20 s with this persist).
     # The RAW edges are cached first: the symmetrized union's two branches
     # are separate subplans (no subtree reuse in Spark), so materializing
     # ``both`` directly would still run the caller's pair lineage TWICE —
@@ -339,84 +336,85 @@ def connected_components(
         )
         .persist()
     )
-    labels = (
-        both.select(F.col("src").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
-        .persist()
-    )
 
-    def _label_sum(frame) -> object:
+    def _propagate(labels: DataFrame) -> DataFrame:
+        neigh = both.join(labels, both.dst == labels.node).select(
+            F.col("src").alias("node"), "label"
+        )
+        return (
+            labels.select("node", "label")
+            .union(neigh)
+            .groupBy("node")
+            .agg(F.min("label").alias("label"))
+        )
+
+    def _label_sum(frame: DataFrame) -> object:
         # exact decimal sum — bigint would overflow at 10^12 nodes with
         # 10^12-scale ids (sum up to ~10^24)
         return frame.agg(
             F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
         ).collect()[0]["s"]
 
-    prev_sum = _label_sum(labels)  # also materializes the caches
-    # ``both`` is cached now; the raw-edge cache has served its purpose
-    edges_once.unpersist()
-    for it in range(max_iterations):
-        neigh = both.join(labels, both.dst == labels.node).select(
-            F.col("src").alias("node"), "label"
+    try:
+        # round 1, seeded from the edges: min over the node and its neighbours
+        labels = (
+            both.groupBy("src")
+            .agg(F.least("src", F.min("dst")).alias("label"))
+            .withColumnRenamed("src", "node")
+            .localCheckpoint(eager=False)
         )
-        # plain min-label propagation, no pointer jumping: path compression
-        # was tried and REVERTED — the jump join evaluates the propagation
-        # subtree twice per round, and near-duplicate graphs are
-        # near-cliques (diameter 1-3), so doubling every round to save at
-        # most one round is a net loss (measured: sf0.01 fuzzy_dedup
-        # 7.8 s → 12.0 s with jumping).
-        new_labels = (
-            labels.select("node", "label")
-            .union(neigh)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-            .persist()
-        )
-        if (it + 1) % 5 == 0:
-            new_labels = new_labels.localCheckpoint()
-        # convergence check WITHOUT joining the two full label tables:
-        # per-node labels are monotonically non-increasing (min over a set
-        # containing the old label), so the total label sum is strictly
-        # smaller iff any label changed — one partial-aggregatable sum per
-        # round instead of an old-vs-new join shuffle
-        cur_sum = _label_sum(new_labels)
-        labels.unpersist()
-        labels = new_labels
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    else:
-        # the final pass still changed labels — the CURRENT labels may
+        prev_sum = _label_sum(labels)  # also materializes the caches
+        # ``both`` is cached now; the raw-edge cache has served its purpose
+        edges_once.unpersist()
+        if prev_sum is None:  # no edges: a sum over zero labels is NULL
+            return labels
+        for _ in range(max_iterations - 1):
+            # plain min-label propagation, no pointer jumping: path
+            # compression was tried and REVERTED — the jump join evaluates
+            # the propagation subtree twice per round, and near-duplicate
+            # graphs are near-cliques (diameter 1-3), so doubling every
+            # round to save at most one round is a net loss (measured:
+            # sf0.01 fuzzy_dedup 7.8 s → 12.0 s with jumping).
+            labels = _propagate(labels).localCheckpoint(eager=False)
+            # convergence check WITHOUT joining the two full label tables:
+            # per-node labels are monotonically non-increasing (min over a
+            # set containing the old label), so the total label sum is
+            # strictly smaller iff any label changed — one
+            # partial-aggregatable sum per round instead of an old-vs-new
+            # join shuffle
+            cur_sum = _label_sum(labels)
+            if cur_sum is None:
+                raise RuntimeError(
+                    "connected_components: the label sum came back NULL after "
+                    f"a non-NULL one ({prev_sum}); convergence cannot be decided"
+                )
+            if cur_sum == prev_sum:
+                return labels
+            prev_sum = cur_sum
+        # the final round still changed labels — the CURRENT labels may
         # nevertheless be the fixpoint (the last change can complete the
-        # propagation), so verify with one more propagation before
-        # declaring failure: a silent fall-through would return WRONG
-        # (split) clusters on a component wider than max_iterations
-        neigh = both.join(labels, both.dst == labels.node).select(
-            F.col("src").alias("node"), "label"
-        )
+        # propagation), so verify with one more propagation before declaring
+        # failure: a silent fall-through would return WRONG (split) clusters
+        # on a component wider than max_iterations
         pending = (
-            labels.select("node", "label")
-            .union(neigh)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
+            _propagate(labels)
             .alias("n")
             .join(labels.alias("o"), "node")
             .where(F.col("n.label") != F.col("o.label"))
             .count()
         )
         if pending > 0:
-            both.unpersist()
             raise RuntimeError(
                 f"connected_components did not converge in {max_iterations} "
                 f"iterations ({pending} labels still changing); raise "
                 "max_iterations — needed rounds are bounded by the largest "
                 "component's diameter"
             )
-    # labels is persisted and materialized; the edge cache has no further
-    # consumers (long-running writers must not accumulate cached relations)
-    both.unpersist()
-    return labels.select("node", "label")
+        return labels
+    finally:
+        # long-running writers must not accumulate cached relations
+        edges_once.unpersist()
+        both.unpersist()
 
 
 def duplicate_clusters(
@@ -470,16 +468,19 @@ def fuzzy_dedup_corpus(
     are deterministic.
 
     Scale shape, stage by stage (none is all-pairs):
-    - candidates: per-band bucket self-join (``lsh_candidate_pairs``),
-      shingle-less docs dropped before banding;
+    - candidates: every signature banded by one ``posexplode``, then a
+      band-bucket self-join (``lsh_candidate_pairs``), shingle-less docs
+      dropped before banding;
     - verify: the per-doc DISTINCT shingle arrays join onto the bounded
       candidate list by doc id (two uniform-key joins) and Jaccard is one
       JVM ``array_intersect``/``array_union`` per candidate pair — the
       inverted-index self-join of ``jaccard_pairs`` is never needed
       because LSH already bounded the pair set;
-    - clustering: min-label propagation, iterations bounded by cluster
-      diameter (near-dup clusters are near-cliques), fails loud past
-      ``max_iterations``;
+    - clustering: min-label propagation seeded from the edges
+      (``connected_components``), rounds bounded by cluster diameter
+      (near-dup clusters settle after the seed and one confirming round),
+      fails loud past ``max_iterations``; its labels come back as a local
+      checkpoint, so the pass leaves no cached relation behind;
     - canonical: ONE partial-aggregatable min-struct groupBy
       (``select_canonical``) — a Zipfian mega-cluster folds map-side;
     - survivors: one left-semi join keyed on the uniform doc id.

@@ -26,7 +26,7 @@ from tantiny_spark.errors import UnknownField
 
 FIELD_KINDS = ("id", "text", "string", "integer", "double", "date", "facet", "json")
 
-_SPARK_TYPES = {
+SPARK_TYPES = {
     "id": T.StringType(),
     "text": T.StringType(),
     "string": T.StringType(),
